@@ -37,6 +37,16 @@ from kylin_on_parquet_v2_spark.query.router import Route, execute_route, plan_ro
 from kylin_on_parquet_v2_spark.session import get_spark, register_views
 
 
+class _RouteState(threading.local):
+    """One thread's routing state (OLAPContext parity: the reference keeps
+    each query's contexts thread-local, OLAPContext.java:122-182), so
+    concurrent callers of one engine each read back their own routes."""
+
+    def __init__(self) -> None:
+        self.route: Route | None = None
+        self.routes: list[Route] = []
+
+
 class OlapEngine:
     def __init__(
         self,
@@ -63,12 +73,7 @@ class OlapEngine:
         #: realization (HybridInstance parity) — batch layouts alone are
         #: INCOMPLETE for its table; see register_hybrid
         self.hybrids: dict = {}
-        #: route taken by the last sql() call (None => pushdown); for tests
-        #: and EXPLAIN-style introspection.
-        self.last_route: Route | None = None
-        #: all routes taken by the last sql() call — multi-context queries
-        #: (join of aggregate islands) carry one per island
-        self.last_routes: list[Route] = []
+        self._route_state = _RouteState()
         #: SQL massage chain (QueryUtil.massageSql parity): applied in order
         #: before analysis; pass transformers=[] to disable.
         self.transformers = (
@@ -84,13 +89,9 @@ class OlapEngine:
         self.max_result_rows = max_result_rows
         self._cache: "OrderedDict[tuple, tuple]" = OrderedDict()
         self._cache_epoch = 0
-        #: when True, sql() never collects for the cache itself — it parks
-        #: the fill on _pending_cache for complete_cache_fill to run later
-        #: (the query server enables this so no Spark collection happens
-        #: inside its routing critical section; round-5 advisor finding #4)
-        self.defer_cache_fill = False
-        self._pending_cache: tuple | None = None
         self._cache_lock = threading.Lock()
+        #: guards += on metrics and workload: concurrent sql() calls share them
+        self._count_lock = threading.Lock()
         #: memoized routing DECISIONS (not results): massaged-SQL+flags+epoch
         #: -> what the planner decided last time. Real deployments register
         #: hundreds of cubes and dashboards repeat queries, so re-scoring
@@ -109,7 +110,8 @@ class OlapEngine:
         #: query-serving metrics (the reference reports cuboid hit ratios
         #: through QueryMetrics/QueryMetricsFacade): how many queries took
         #: a cuboid route (and of those, exact project-only hits), fell
-        #: back to pushdown, or were undigestible; plus per-cube hits.
+        #: back to pushdown, or were undigestible; plus per-cube hits and
+        #: result-cache hits (answered before routing, so counted apart).
         self.metrics: Counter = Counter()
         #: running-query registry + BadQueryDetector watchdog (reference
         #: ResultPlan.scala:89/115, BadQueryDetector.java:129-147):
@@ -134,6 +136,32 @@ class OlapEngine:
     #: routing-decision memo entries kept (LRU); decisions are tiny (a
     #: digest + a Route), the bound only guards pathological SQL churn
     ROUTE_MEMO_SIZE = 512
+
+    @property
+    def last_route(self) -> Route | None:
+        """Route taken by the calling thread's last sql() call (None =>
+        pushdown); for tests and EXPLAIN-style introspection."""
+        return self._route_state.route
+
+    @last_route.setter
+    def last_route(self, route: Route | None) -> None:
+        self._route_state.route = route
+
+    @property
+    def last_routes(self) -> list[Route]:
+        """All routes taken by the calling thread's last sql() call —
+        multi-context queries (join of aggregate islands) carry one per
+        island."""
+        return self._route_state.routes
+
+    @last_routes.setter
+    def last_routes(self, routes: list[Route]) -> None:
+        self._route_state.routes = routes
+
+    def _set_routes(self, routes: list[Route]) -> None:
+        """Record the calling thread's routes; the first is ``last_route``."""
+        self._route_state.routes = routes
+        self._route_state.route = routes[0] if routes else None
 
     # -- metadata / build ----------------------------------------------------
 
@@ -353,7 +381,8 @@ class OlapEngine:
         inst = self.cubes[name]
         dims = set(inst.desc.dimensions)
         wl: Counter = Counter()
-        for q, n in self.workload.items():
+        # snapshot: concurrent sql() calls add keys to the live Counter
+        for q, n in list(self.workload.items()):
             mapped: set[str] = set()
             ok = True
             for c in q:
@@ -418,7 +447,7 @@ class OlapEngine:
         dims = set(desc.dimensions)
         if workload is None:
             workload = {
-                q: n for q, n in self.workload.items() if set(q) <= dims
+                q: n for q, n in list(self.workload.items()) if set(q) <= dims
             }
         ids = recommend_cuboids(
             CuboidScheduler(desc),
@@ -476,20 +505,16 @@ class OlapEngine:
         cache_key = (
             query, pkey, use_cube, approx_distinct, approx_topn, self._cache_epoch
         )
-        # A pending deferred fill from a PREVIOUS call must never survive
-        # into this one: embedded use alongside the server could otherwise
-        # leave a stale pending that a later un-cacheable server request
-        # pops and serves as ITS response (round-6 advisor finding #3).
-        self._pending_cache = None
+        self._set_routes([])
         if self.result_cache_size and not validate and not skip_result_cache:
             with self._cache_lock:
                 hit = self._cache.pop(cache_key, None)
                 if hit is not None:
                     self._cache[cache_key] = hit  # LRU touch
             if hit is not None:
-                schema, rows, route, routes = hit
-                self.last_route = route
-                self.last_routes = list(routes)
+                self._count("result_cache_hits")
+                schema, rows, routes = hit
+                self._set_routes(list(routes))
                 return self.spark.createDataFrame(rows, schema)
         t_plan = _time.perf_counter()
         with self._cache_lock:
@@ -501,8 +526,6 @@ class OlapEngine:
             if out is not None:
                 return out
         df = self.spark.sql(query, args=params) if params is not None else self.spark.sql(query)
-        self.last_route = None
-        self.last_routes = []
         if not use_cube or not self.cubes:
             self._set_pool("heavy")
             self._note_route_time(t_plan)
@@ -510,10 +533,10 @@ class OlapEngine:
         if memo is not None and memo[0] in ("pushdown", "undigestible"):
             # memoized negative decision: skip digest extraction and cube
             # scoring — spark.sql above already produced the answer
-            self.metrics["route_memo_hits"] += 1
-            self.metrics[memo[0]] += 1
+            self._count("route_memo_hits")
+            self._count(memo[0])
             if memo[0] == "pushdown":
-                self.workload[memo[1]] += 1
+                self._count(memo[1], counter=self.workload)
             self._set_pool("heavy")
             self._note_route_time(t_plan)
             return self._maybe_cache(cache_key, df, skip_result_cache)
@@ -534,31 +557,31 @@ class OlapEngine:
                     joined = execute(obj, approx_distinct) if obj is not None else None
                 except Exception:
                     joined = None  # analysis surprise — pushdown is always right
-                    self.last_route, self.last_routes = None, []
+                    self._set_routes([])
                 if joined is not None:
                     multi = (kind, obj)
                     break
             if joined is not None:
-                self.metrics["routed"] += 1
-                self.metrics["routed_multi_context"] += 1
+                self._count("routed")
+                self._count("routed_multi_context")
                 self._set_pool("light")
                 self._memoize_route(cache_key, ("multi",) + multi)
                 self._note_route_time(t_plan)
                 if validate:
                     self._assert_same(joined, df)
                 return self._maybe_cache(cache_key, joined, skip_result_cache)
-            self.metrics["undigestible"] += 1
+            self._count("undigestible")
             self._set_pool("heavy")
             self._memoize_route(cache_key, ("undigestible",))
             self._note_route_time(t_plan)
             return self._maybe_cache(cache_key, df, skip_result_cache)
-        self.workload[digest.needed_cols()] += 1
+        self._count(digest.needed_cols(), counter=self.workload)
         # realization choice (RealizationChooser parity): among all cubes
         # that can answer, prefer exact-match hits, then the narrowest
         # cuboid (fewest dims => fewest layout rows scanned)
         candidates = self._plan_candidates(digest, approx_distinct, approx_topn)
         if not candidates:
-            self.metrics["pushdown"] += 1
+            self._count("pushdown")
             self._set_pool("heavy")
             # keep the needed-col set so memoized replays still feed the
             # cube-planner workload like the first execution did
@@ -567,15 +590,15 @@ class OlapEngine:
             return self._maybe_cache(cache_key, df, skip_result_cache)
 
         inst, route = min(candidates, key=self._route_cost)
-        self.metrics["routed"] += 1
+        self._count("routed")
         self._set_pool("vip" if route.exact else "light")
         if route.segment_reject:
             # observability for the DimensionRangeInfo fold: how many whole
             # segments the dim-range pruner removed from this scan
-            self.metrics["segments_range_pruned"] += len(route.segment_reject)
+            self._count("segments_range_pruned", len(route.segment_reject))
         if route.exact:
-            self.metrics["exact_hits"] += 1
-        self.metrics[f"cube:{route.cube}"] += 1
+            self._count("exact_hits")
+        self._count(f"cube:{route.cube}")
         self._memoize_route(
             cache_key,
             ("routed", digest, inst.desc.name, route, inst.lifecycle_epoch),
@@ -584,21 +607,24 @@ class OlapEngine:
         routed = self._execute_planned(digest, inst, route)
         if validate:
             self._assert_same(routed, df)
-        self.last_route = route
-        self.last_routes = [route]
+        self._set_routes([route])
         return self._maybe_cache(cache_key, routed, skip_result_cache)
 
     # -- routing-decision memo (round-6 verdict item 4) ----------------------
 
     def _memoize_route(self, key: tuple, decision: tuple) -> None:
-        # dict mutations share _cache_lock (routing itself is serialized by
-        # callers — the server holds its own lock — this only keeps the
-        # OrderedDict structurally sound under embedded concurrent use)
+        # dict mutations share _cache_lock: concurrent sql() calls plan in
+        # parallel, and the OrderedDict must stay structurally sound
         with self._cache_lock:
             self._route_memo[key] = decision
             self._route_memo.move_to_end(key)
             while len(self._route_memo) > self.ROUTE_MEMO_SIZE:
                 self._route_memo.popitem(last=False)
+
+    def _count(self, key, n: float = 1, counter: Counter | None = None) -> None:
+        """Add ``n`` to ``metrics[key]``, or to ``counter[key]``."""
+        with self._count_lock:
+            (self.metrics if counter is None else counter)[key] += n
 
     def _note_route_time(self, t0: float) -> None:
         """Accumulate driver-side planning time (analysis + digest + cube
@@ -607,8 +633,8 @@ class OlapEngine:
         verdict asked to see."""
         import time as _time
 
-        self.metrics["route_time_ms"] += (_time.perf_counter() - t0) * 1000.0
-        self.metrics["route_timed_calls"] += 1
+        self._count("route_time_ms", (_time.perf_counter() - t0) * 1000.0)
+        self._count("route_timed_calls")
 
     def _replay_route(
         self,
@@ -638,18 +664,17 @@ class OlapEngine:
                 with self._cache_lock:
                     self._route_memo.pop(cache_key, None)
                 return None
-            self.metrics["route_memo_hits"] += 1
-            self.workload[digest.needed_cols()] += 1
-            self.metrics["routed"] += 1
+            self._count("route_memo_hits")
+            self._count(digest.needed_cols(), counter=self.workload)
+            self._count("routed")
             if route.segment_reject:
-                self.metrics["segments_range_pruned"] += len(route.segment_reject)
+                self._count("segments_range_pruned", len(route.segment_reject))
             if route.exact:
-                self.metrics["exact_hits"] += 1
-            self.metrics[f"cube:{route.cube}"] += 1
+                self._count("exact_hits")
+            self._count(f"cube:{route.cube}")
             self._set_pool("vip" if route.exact else "light")
             routed = self._execute_planned(digest, inst, route)
-            self.last_route = route
-            self.last_routes = [route]
+            self._set_routes([route])
             self._note_route_time(t_plan)
             return self._maybe_cache(cache_key, routed, skip_result_cache)
         if kind == "multi":
@@ -659,7 +684,6 @@ class OlapEngine:
                 "union": self._execute_union_digest,
                 "agg_union": self._execute_agg_over_union,
             }[mkind]
-            self.last_route, self.last_routes = None, []
             try:
                 joined = execute(obj, approx_distinct)
             except Exception:
@@ -667,11 +691,11 @@ class OlapEngine:
             if joined is None:  # cube set changed under the decision
                 with self._cache_lock:
                     self._route_memo.pop(cache_key, None)
-                self.last_route, self.last_routes = None, []
+                self._set_routes([])
                 return None
-            self.metrics["route_memo_hits"] += 1
-            self.metrics["routed"] += 1
-            self.metrics["routed_multi_context"] += 1
+            self._count("route_memo_hits")
+            self._count("routed")
+            self._count("routed_multi_context")
             self._set_pool("light")
             self._note_route_time(t_plan)
             return self._maybe_cache(cache_key, joined, skip_result_cache)
@@ -694,7 +718,7 @@ class OlapEngine:
 
         candidates: list[tuple[CubeInstance, Route]] = []
         for inst in self.cubes.values():
-            self.metrics["plan_route_calls"] += 1
+            self._count("plan_route_calls")
             route = plan_route(
                 digest, inst, approx_distinct=approx_distinct, approx_topn=approx_topn
             )
@@ -715,7 +739,7 @@ class OlapEngine:
         if hyb is not None:
             from kylin_on_parquet_v2_spark.streaming.hybrid import execute_hybrid
 
-            self.metrics["routed_hybrid"] += 1
+            self._count("routed_hybrid")
             return execute_hybrid(digest, inst, route, hyb, self.spark)
         return execute_route(digest, inst, route, self.spark)
 
@@ -773,9 +797,8 @@ class OlapEngine:
         if jd.limit is not None:
             out = out.limit(jd.limit)
         for route in routes:
-            self.metrics[f"cube:{route.cube}"] += 1
-        self.last_routes = routes
-        self.last_route = routes[0]
+            self._count(f"cube:{route.cube}")
+        self._set_routes(routes)
         return out
 
     def _execute_island(self, x, approx_distinct: bool, routes: list) -> DataFrame | None:
@@ -835,9 +858,8 @@ class OlapEngine:
         if ud.limit is not None:
             out = out.limit(ud.limit)
         for route in routes:
-            self.metrics[f"cube:{route.cube}"] += 1
-        self.last_routes = routes
-        self.last_route = routes[0]
+            self._count(f"cube:{route.cube}")
+        self._set_routes(routes)
         return out
 
     def _execute_agg_over_union(self, ad, approx_distinct: bool) -> DataFrame | None:
@@ -875,22 +897,16 @@ class OlapEngine:
     ) -> DataFrame:
         """Fill the LRU result cache (materializes the result — the
         reference also caches collected result sets, QueryService:463-560).
+        The collect runs on the calling thread, inside its tracked-query job
+        group when it has one, so a fill is cancellable like any query.
 
         Collection is capped: a result bigger than max_result_rows (or the
         default cap) is returned un-cached instead of being materialized on
         the driver — the cache is a dashboard-query accelerator, not a spill
-        risk.
-
-        With ``defer_cache_fill`` set (the query server turns it on), the
-        collect does NOT happen here: the fill is parked on
-        ``_pending_cache`` and completed by ``complete_cache_fill`` — so a
-        caller holding a routing lock never materializes inside it."""
+        risk."""
         if not self.result_cache_size or skip:
             return df
-        routes = list(self.last_routes) + (
-            [self.last_route] if self.last_route is not None else []
-        )
-        if any(r is not None and r.hybrid_tail for r in routes):
+        if any(r.hybrid_tail for r in self.last_routes):
             # hybrid answers depend on the realtime store, which grows
             # OUTSIDE the engine's cache epoch (stream appends) — caching
             # would serve stale tails; the boundary/tail are recomputed per
@@ -898,51 +914,15 @@ class OlapEngine:
             # join/union with a hybrid island at position >0 must not be
             # cached either (round-5 advisor finding #1).
             return df
-        if self.defer_cache_fill:
-            self._pending_cache = (key, df, self.last_route, list(self.last_routes))
-            return df
-        rows = self._fill_cache(key, df, self.last_route, list(self.last_routes))
-        if rows is None:
-            return df
-        return self.spark.createDataFrame(rows, df.schema)
-
-    def _fill_cache(self, key, df, route, routes):
-        """Collect (capped) and store; returns the rows, or None if the
-        result exceeded the cap and was left uncached. Dict mutation is
-        guarded by ``_cache_lock`` so a deferred fill can run outside any
-        caller-held routing lock."""
         cap = self.max_result_rows or self.DEFAULT_CACHE_ROW_CAP
         rows = df.limit(cap + 1).collect()
         if len(rows) > cap:
-            return None
+            return df
         with self._cache_lock:
-            self._cache[key] = (df.schema, rows, route, routes)
+            self._cache[key] = (df.schema, rows, list(self.last_routes))
             while len(self._cache) > self.result_cache_size:
                 self._cache.popitem(last=False)
-        return rows
-
-    def take_pending_cache(self, expect_df: DataFrame | None = None) -> tuple | None:
-        """Pop the deferred cache fill parked by the last ``sql`` call
-        (``defer_cache_fill`` mode). Call under the same lock as ``sql``.
-
-        ``expect_df`` guards against serving a STALE pending as another
-        query's answer (round-6 advisor finding #3): the caller passes the
-        DataFrame its own ``sql`` call returned, and a pending parked for a
-        different DataFrame is discarded instead of popped. ``sql`` also
-        clears the slot on entry, so this is a second belt."""
-        p, self._pending_cache = self._pending_cache, None
-        if p is not None and expect_df is not None and p[1] is not expect_df:
-            return None
-        return p
-
-    def complete_cache_fill(self, pending: tuple) -> list | None:
-        """Run a deferred cache fill (outside any routing lock): collects
-        the capped result, stores it, and returns the FULL row list so the
-        caller can serve its response from it without a second collection —
-        or None when the result was too big to cache (caller collects its
-        own limited view)."""
-        key, df, route, routes = pending
-        return self._fill_cache(key, df, route, routes)
+        return self.spark.createDataFrame(rows, df.schema)
 
     def explain(self, query: str, approx_distinct: bool = False) -> str:
         """Human-readable routing decision + physical plan for ``query``.

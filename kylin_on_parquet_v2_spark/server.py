@@ -8,13 +8,13 @@ entry point; the response carries the result rows plus routing metadata
 pushdown). Cube/metrics listings mirror the REST controllers' read side.
 
 Deliberately stdlib-only (http.server): the surface is the contract, not the
-web stack. One engine serves all requests; ONLY digest/route planning runs
-under the lock (it reads/writes engine-global ``last_route`` state — the
-reference keeps OLAPContext thread-local instead). Spark job execution and
-result collection happen OUTSIDE the critical section, so a slow pushdown
-scan no longer blocks a fast routed dashboard query on another connection
-(Spark schedules jobs from concurrent threads independently; the scheduler
-pool tag is a thread-local property set before the lock is released).
+web stack. One engine serves all requests, each on its own handler thread,
+with no server-side lock: the engine keeps routing state per thread (as the
+reference keeps OLAPContext thread-local), so a handler reads back its own
+``last_route`` / ``last_routes`` after ``engine.sql``. Planning, Spark job
+execution and result collection of concurrent requests all overlap; Spark
+schedules jobs from concurrent threads independently, and the job group and
+scheduler pool tags are thread-local properties too.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ import base64
 import datetime as _dt
 import decimal
 import json
-import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
@@ -68,7 +67,6 @@ def _route_info(route) -> dict | None:
 
 class _Handler(BaseHTTPRequestHandler):
     engine: OlapEngine  # set by make_server
-    lock: threading.Lock
 
     # silence per-request stderr logging
     def log_message(self, fmt: str, *args) -> None:  # noqa: A003
@@ -87,48 +85,46 @@ class _Handler(BaseHTTPRequestHandler):
         if self.path == "/health":
             self._reply(200, {"status": "ok"})
         elif self.path == "/api/cubes":
-            with self.lock:
-                cubes = [
-                    {
-                        "name": inst.desc.name,
-                        "model": inst.model.name,
-                        "dimensions": list(inst.desc.dimensions),
-                        "measures": [m.name for m in inst.desc.measures],
-                        "segmented": inst.segmented,
-                        "n_layouts": len(inst.layouts),
-                    }
-                    for inst in eng.cubes.values()
-                ]
+            cubes = [
+                {
+                    "name": inst.desc.name,
+                    "model": inst.model.name,
+                    "dimensions": list(inst.desc.dimensions),
+                    "measures": [m.name for m in inst.desc.measures],
+                    "segmented": inst.segmented,
+                    "n_layouts": len(inst.layouts),
+                }
+                for inst in list(eng.cubes.values())
+            ]
             self._reply(200, {"cubes": cubes})
         elif self.path == "/api/metrics":
-            with self.lock:
-                self._reply(200, {"metrics": dict(eng.metrics)})
+            # a snapshot copy: handler threads keep counting into the live one
+            self._reply(200, {"metrics": dict(eng.metrics)})
         elif self.path.startswith("/api/cubes/") and self.path.endswith("/recommend"):
             # GET /api/cubes/<name>/recommend — cube-planner recommendation
             # from the recorded workload + measured layout rows (reference
             # CubeController.java:932 /{cubeName}/cuboids/recommend)
             name = self.path[len("/api/cubes/") : -len("/recommend")]
-            with self.lock:
-                if name not in eng.cubes:
-                    self._reply(404, {"error": f"unknown cube {name}"})
-                    return
-                inst = eng.cubes[name]
-                ids = eng.recommend_cuboids(name)
-                self._reply(
-                    200,
-                    {
-                        "cube": name,
-                        "recommended_cuboids": [
-                            {
-                                "cuboid_id": cid,
-                                "dims": list(inst.scheduler.cuboids[cid].dims),
-                                "rows": inst.layout_rows.get(cid),
-                            }
-                            for cid in ids
-                        ],
-                        "n_current_layouts": len(inst.layouts),
-                    },
-                )
+            if name not in eng.cubes:
+                self._reply(404, {"error": f"unknown cube {name}"})
+                return
+            inst = eng.cubes[name]
+            ids = eng.recommend_cuboids(name)
+            self._reply(
+                200,
+                {
+                    "cube": name,
+                    "recommended_cuboids": [
+                        {
+                            "cuboid_id": cid,
+                            "dims": list(inst.scheduler.cuboids[cid].dims),
+                            "rows": inst.layout_rows.get(cid),
+                        }
+                        for cid in ids
+                    ],
+                    "n_current_layouts": len(inst.layouts),
+                },
+            )
         elif self.path == "/api/queries":
             # running-query listing (the read side of stopQuery — the
             # reference's query page shows in-flight queries + durations)
@@ -171,24 +167,12 @@ class _Handler(BaseHTTPRequestHandler):
         per context plus the formatted Spark physical plan — never
         collects, never fills the result cache."""
         try:
-            with self.lock:
-                # skip_result_cache: a cache HIT would hand back
-                # spark.createDataFrame(cached rows) and the 'plan' field
-                # would show a LocalTableScan of the cache instead of the
-                # statement's real physical plan (round-7 advisor #2)
-                df = self.engine.sql(
-                    sql,
-                    use_cube=bool(req.get("use_cube", True)),
-                    approx_distinct=bool(req.get("approx_distinct", False)),
-                    approx_topn=bool(req.get("approx_topn", False)),
-                    params=req.get("params"),
-                    skip_result_cache=True,
-                )
-                route = self.engine.last_route
-                routes = list(self.engine.last_routes)
-                # planning-only belt: drop any deferred cache fill so it
-                # can't leak into a later /api/query response
-                self.engine.take_pending_cache(expect_df=df)
+            # skip_result_cache: a cache HIT would hand back
+            # spark.createDataFrame(cached rows) and the 'plan' field
+            # would show a LocalTableScan of the cache instead of the
+            # statement's real physical plan (round-7 advisor #2)
+            df = self.engine.sql(sql, **_sql_options(req), skip_result_cache=True)
+            route, routes = self.engine.last_route, self.engine.last_routes
         except Exception as exc:
             self._reply(400, {"error": str(exc).split("\n", 1)[0]})
             return
@@ -203,6 +187,15 @@ class _Handler(BaseHTTPRequestHandler):
                 "plan": _explain_string(df),
             },
         )
+
+    def _fail(self, qid: str, exc: Exception, code: int) -> None:
+        """Reply to a failed query: 410 when it was cancelled, else ``code``."""
+        reason = self.engine.tracker.was_cancelled(qid)
+        if reason is not None:
+            # killed by stopQuery or the watchdog
+            self._reply(410, {"query_id": qid, "cancelled": True, "reason": reason})
+        else:
+            self._reply(code, {"error": str(exc).split("\n", 1)[0]})
 
     def _query(self, sql: str, req: dict) -> None:
         limit = min(int(req.get("limit", MAX_RESULT_ROWS)), MAX_RESULT_ROWS)
@@ -228,57 +221,20 @@ class _Handler(BaseHTTPRequestHandler):
             return
         try:
             try:
-                # Critical section covers ROUTING ONLY: engine.sql builds the
-                # (lazy) DataFrame and records last_route/last_routes on the
-                # engine; both are copied out before the lock drops. With the
-                # result cache enabled, the cache FILL is deferred too
-                # (defer_cache_fill set in make_server) — the pending fill is
-                # popped here and completed below, outside the lock, so a
-                # cacheable slow scan no longer serializes all connections
-                # (round-5 advisor finding #4).
-                with self.lock:
-                    df = self.engine.sql(
-                        sql,
-                        use_cube=bool(req.get("use_cube", True)),
-                        approx_distinct=bool(req.get("approx_distinct", False)),
-                        approx_topn=bool(req.get("approx_topn", False)),
-                        params=req.get("params"),
-                    )
-                    route = self.engine.last_route
-                    routes = list(self.engine.last_routes)
-                    pending = self.engine.take_pending_cache(expect_df=df)
+                # routes are read back on this handler thread, where
+                # engine.sql recorded them; with the result cache on, the
+                # fill collects inside this tracked window too
+                df = self.engine.sql(sql, **_sql_options(req))
+                route, routes = self.engine.last_route, self.engine.last_routes
             except Exception as exc:
                 # planning failures are the client's problem: bad SQL, unknown
                 # tables/columns (the reference's SQLException path)
-                self._reply(400, {"error": str(exc).split("\n", 1)[0]})
+                self._fail(qid, exc, 400)
                 return
             try:
-                # execution/collection outside the lock: concurrent requests'
-                # Spark jobs run in parallel (FIFO/FAIR across threads). When a
-                # deferred cache fill is pending, ONE collection both fills the
-                # cache and serves this response; oversized results fall back to
-                # the plain limited collect (and stay uncached).
-                cached_rows = (
-                    self.engine.complete_cache_fill(pending)
-                    if pending is not None
-                    else None
-                )
-                rows = (
-                    cached_rows[:limit]
-                    if cached_rows is not None
-                    else df.limit(limit).collect()
-                )
+                rows = df.limit(limit).collect()
             except Exception as exc:  # runtime failure on a planned query
-                reason = self.engine.tracker.was_cancelled(qid)
-                if reason is not None:
-                    # killed by stopQuery or the watchdog — report the
-                    # cancelled status, not a generic server error
-                    self._reply(
-                        410,
-                        {"query_id": qid, "cancelled": True, "reason": reason},
-                    )
-                    return
-                self._reply(500, {"error": str(exc).split("\n", 1)[0]})
+                self._fail(qid, exc, 500)
                 return
         finally:
             cm.__exit__(None, None, None)
@@ -299,6 +255,16 @@ class _Handler(BaseHTTPRequestHandler):
                 "duration_ms": round(ms, 1),
             },
         )
+
+
+def _sql_options(req: dict) -> dict:
+    """The ``engine.sql`` options a query or explain request may set."""
+    return {
+        "use_cube": bool(req.get("use_cube", True)),
+        "approx_distinct": bool(req.get("approx_distinct", False)),
+        "approx_topn": bool(req.get("approx_topn", False)),
+        "params": req.get("params"),
+    }
 
 
 def _explain_string(df) -> str:
@@ -324,12 +290,9 @@ def make_server(
         ...
         srv.shutdown()
     """
-    # the server owns this engine's collection discipline: cache fills run
-    # outside the routing lock via take_pending_cache/complete_cache_fill
-    engine.defer_cache_fill = True
-    handler = type(
-        "BoundHandler", (_Handler,), {"engine": engine, "lock": threading.Lock()}
-    )
+    # handler threads share the engine and nothing else: its routing state
+    # is per thread, so requests need no server-side lock
+    handler = type("BoundHandler", (_Handler,), {"engine": engine})
     return ThreadingHTTPServer((host, port), handler)
 
 

@@ -9,9 +9,9 @@
 3. IncrementalDedup.refresh must return the DELTA pair count from the
    already-computed pairs DataFrame — no O(history) re-scan of the
    accumulated pair store per refresh.
-4. The query server defers result-cache fills outside its routing lock:
-   engine.sql under defer_cache_fill never collects; the fill is completed
-   by complete_cache_fill and serves the cache on the next request.
+4. The query server fills the result cache once and serves the cached
+   rows on the next request; concurrent requests each get their own
+   query's routes, from the cache or not.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from kylin_on_parquet_v2_spark.pipeline import dedup as D
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
 from kylin_on_parquet_v2_spark.server import make_server
 from tests.conftest import SF_SMOKE
+from tests.test_server import check_concurrent_routes
 
 
 def test_maybe_cache_skips_hybrid_island_beyond_first(spark):
@@ -134,38 +135,24 @@ def _post(base: str, payload: dict) -> tuple[int, dict]:
         return resp.status, json.loads(resp.read())
 
 
-def test_server_cache_fill_is_deferred_and_served(cached_server):
-    """With the result cache on, the fill happens via the deferred path
-    (no collection under the lock) and the second request hits the cache."""
+def test_server_cache_fill_serves_second_request(cached_server):
+    """With the result cache on, the first request fills the cache and the
+    second request is served from it."""
     eng, base = cached_server
-    assert eng.defer_cache_fill  # make_server enabled deferral
     sql = (
         "select l_returnflag, sum(l_quantity) as s "
         "from lineitem group by l_returnflag order by l_returnflag"
     )
     code, body1 = _post(base, {"sql": sql})
     assert code == 200, body1
-    # the deferred fill completed outside the lock and populated the cache
-    assert eng._pending_cache is None
     assert len(eng._cache) == 1
     code, body2 = _post(base, {"sql": sql})
     assert code == 200 and body2["rows"] == body1["rows"]
 
 
-def test_defer_cache_fill_sql_does_not_collect(spark):
-    """Under defer_cache_fill, engine.sql parks the fill instead of
-    collecting; complete_cache_fill returns the rows and stores them."""
-    eng = OlapEngine(spark, result_cache_size=4)
-    eng.register_sources(SF_SMOKE)
-    eng.defer_cache_fill = True
-    df = eng.sql("select count(*) as c from region")
-    assert not eng._cache  # nothing cached yet
-    pending = eng.take_pending_cache()
-    assert pending is not None
-    rows = eng.complete_cache_fill(pending)
-    assert rows is not None and rows[0]["c"] == df.collect()[0]["c"]
-    assert len(eng._cache) == 1
-    assert eng.take_pending_cache() is None  # popped exactly once
+def test_cached_server_concurrent_requests_get_their_own_routes(cached_server):
+    """Cache hits restore each request's own routes on its handler thread."""
+    check_concurrent_routes(*cached_server)
 
 
 def test_ngram_jaccard_cap_defaults_on():

@@ -7,7 +7,9 @@
    CubeInstance.load rejects a same-named table pointing at a different
    location — a rebuild into another dir can never repoint a live cube's
    layout scan at foreign files.
-3. (stale deferred cache fill — covered in tests/test_route_memo.py.)
+3. (stale deferred cache fill — the deferral is gone; routing state is now
+   per thread, checked by the concurrent tests in tests/test_route_memo.py
+   and tests/test_server.py.)
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Routing-decision memoization (round-6 verdict item 4) and the stale
-deferred-cache-fill guard (round-6 advisor finding #3).
+"""Routing-decision memoization (round-6 verdict item 4) and per-thread
+routes under concurrent sql() calls.
 
 Real deployments register hundreds of cubes; without a memo every sql()
 re-scores all of them. The memo replays the DECISION only — execution
@@ -15,6 +15,7 @@ import pytest
 from kylin_on_parquet_v2_spark.datasets import TPCH_CUBE, TPCH_MODEL
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
 from tests.conftest import SF_SMOKE
+from tests.test_server import MULTI_CONTEXT_SQL
 
 ROUTED_SQL = (
     "select l_returnflag, sum(l_quantity) as s from lineitem group by l_returnflag"
@@ -113,30 +114,14 @@ def test_validate_bypasses_memo(eng):
     assert eng.metrics["route_memo_hits"] == hits
 
 
-def test_stale_pending_cache_cleared_on_next_sql(spark, tmp_path):
-    """Embedded use alongside the server: a pending fill parked by one call
-    must not survive into the next (advisor r6 #3) — and the handler-side
-    expect_df guard refuses a pending parked for a different DataFrame."""
-    e = OlapEngine(spark, storage_dir=str(tmp_path), result_cache_size=4)
-    e.register_sources(SF_SMOKE)
-    e.defer_cache_fill = True
-    df1 = e.sql("select 1 as a")
-    assert e._pending_cache is not None
-    # a second sql() clears the stale slot on entry before parking its own
-    df2 = e.sql("select 2 as b")
-    p = e.take_pending_cache(expect_df=df2)
-    assert p is not None and p[1] is df2
-    # expect_df mismatch: pending for df2 is never served as df1's answer
-    e.sql("select 3 as c")
-    assert e.take_pending_cache(expect_df=df1) is None
-    assert e._pending_cache is None  # discarded, not left behind
-
-
 def test_concurrent_mixed_queries_thread_safe(eng):
-    """Many threads hammering a mix of routed / pushdown / repeated queries
-    must produce exactly the single-threaded answers — no memo corruption,
-    no cross-query cache bleed, no exception. (The advisor flagged engine
-    cache handling twice; this pins the locked paths under contention.)"""
+    """Many threads hammering a mix of routed / pushdown / multi-context /
+    repeated queries must produce exactly the single-threaded answers and
+    routes — no memo corruption, no route bleed between threads, no
+    exception, no lost metric update. Each thread reads last_route /
+    last_routes back after its own call, as the query server's handler
+    threads do; a short switch interval makes the threads interleave."""
+    import sys
     import threading
 
     queries = [
@@ -145,29 +130,45 @@ def test_concurrent_mixed_queries_thread_safe(eng):
         "select count(*) as n from lineitem",
         "select l_linestatus, sum(l_extendedprice) as s from lineitem "
         "group by l_linestatus",
+        MULTI_CONTEXT_SQL,
     ]
-    expected = [
-        sorted(tuple(r) for r in eng.sql(q).collect()) for q in queries
-    ]
+
+    def answer(q: str) -> tuple:
+        rows = sorted(tuple(r) for r in eng.sql(q).collect())
+        route = eng.last_route
+        key = None if route is None else (route.cube, route.cuboid.dims)
+        return rows, key, len(eng.last_routes)
+
+    expected = [answer(q) for q in queries]
+    assert expected[1][1] is None and expected[4][2] == 2
+    counted = ("routed", "pushdown", "undigestible")
+    before = sum(eng.metrics[k] for k in counted)
     errors: list[Exception] = []
-    results: dict[tuple[int, int], list] = {}
+    results: dict[tuple[int, int], tuple] = {}
 
     def run(tid: int) -> None:
         try:
             for i, q in enumerate(queries):
-                results[(tid, i)] = sorted(tuple(r) for r in eng.sql(q).collect())
+                results[(tid, i)] = answer(q)
         except Exception as exc:  # noqa: BLE001 — recorded for the assert
             errors.append(exc)
 
     threads = [threading.Thread(target=run, args=(t,)) for t in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=300)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
     assert not errors, errors
     assert len(results) == 6 * len(queries)
-    for (tid, i), rows in results.items():
-        assert rows == expected[i], (tid, i)
+    for (tid, i), got in results.items():
+        assert got == expected[i], (tid, i)
+    # every call is counted exactly once
+    assert sum(eng.metrics[k] for k in counted) - before == len(results)
     # memo still coherent afterwards: a repeat plans zero new routes
     before = eng.metrics["plan_route_calls"]
     eng.sql(ROUTED_SQL).collect()
